@@ -28,7 +28,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sol_spark.registry import register
-from sol_spark.tables import load_tables
+from sol_spark.tables import load_tables, local_frame
 
 
 _LAZY_PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
@@ -3761,7 +3761,8 @@ def dedup_rand_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = n * (n - 1) / 2
     rand = round(1.0 - (s_a + s_b - 2 * s_ij) / tot, 6) + 0.0
     ari = round((s_ij - s_a * s_b / tot) / ((s_a + s_b) / 2.0 - s_a * s_b / tot), 6) + 0.0
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(n), int(s_ij), int(s_a), int(s_b), rand, ari)],
         "n_docs bigint, agree_pairs bigint, pairs_a bigint, pairs_b bigint, "
         "rand_index double, ari double",
@@ -5611,14 +5612,14 @@ def graph_densest_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not summary:
         # Degenerate corpora (single doc, no simhash pairs) yield an empty
         # graph — round 0 has V=0 — matching the oracle's empty result set.
-        return spark.createDataFrame(
-            [], "round long, n_vertices long, n_edges long, density_ppm long, is_best boolean"
+        return local_frame(
+            spark, [], "round long, n_vertices long, n_edges long, density_ppm long, is_best boolean"
         )
     best = max(s[3] for s in summary)
     best_round = min(s[0] for s in summary if s[3] == best)
     rows = [(r, v, e, d, r == best_round) for r, v, e, d in summary]
-    return spark.createDataFrame(
-        rows, "round long, n_vertices long, n_edges long, density_ppm long, is_best boolean"
+    return local_frame(
+        spark, rows, "round long, n_vertices long, n_edges long, density_ppm long, is_best boolean"
     ).orderBy("round")
 
 

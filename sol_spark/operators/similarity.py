@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sol_spark.registry import register
-from sol_spark.tables import load_tables
+from sol_spark.tables import load_tables, local_frame
 
 N_QUERIES = 5  # vec_id < 5 are the query vectors
 TOP_K = 3
@@ -436,7 +436,10 @@ def kmeans_centroids(spark: SparkSession, emb: DataFrame) -> DataFrame:
     projected argmin (:func:`_km_assign`); the update is posexplode ->
     (cent_id, dim) avg — K*D cells shuffled regardless of corpus size; only
     the K*D centroid table (512 doubles) reaches the driver, the classic
-    k-means model sync point."""
+    k-means model sync point. The updated centroids return to the next
+    round (and to the caller) as an Arrow-built ``LocalRelation``
+    (:func:`sol_spark.tables.local_frame`), so reading them runs no Python
+    worker."""
     cent = (
         emb.filter((F.col("vec_id") >= _IVF_CENT_MIN) & (F.col("vec_id") < _IVF_CENT_MIN + KM_K))
         .select(
@@ -455,7 +458,8 @@ def kmeans_centroids(spark: SparkSession, emb: DataFrame) -> DataFrame:
         by_cent: dict[int, list[tuple[int, float]]] = {}
         for r in cells:
             by_cent.setdefault(r["cent_id"], []).append((r["dim"], float(r["val"])))
-        cent = spark.createDataFrame(
+        cent = local_frame(
+            spark,
             [(cid, [v for _, v in sorted(pairs)]) for cid, pairs in sorted(by_cent.items())],
             "cent_id INT, cente ARRAY<DOUBLE>",
         )
@@ -862,8 +866,8 @@ def sim_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         ).collect()[0]
         w = [w[k] - LR_RATE * float(grads[f"g{k}"]) / n for k in range(EMB_DIM)]
-    return spark.createDataFrame(
-        [(k + 1, round(w[k], 6)) for k in range(EMB_DIM)], "k bigint, weight double"
+    return local_frame(
+        spark, [(k + 1, round(w[k], 6)) for k in range(EMB_DIM)], "k bigint, weight double"
     )
 
 
@@ -1525,8 +1529,8 @@ def sim_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (np_, n_cand, hits, round(hits / (N_QUERIES * TOP_K), 4)) for np_, n_cand, hits in parts
     ]
-    return spark.createDataFrame(
-        rows, "nprobe int, candidates long, hits long, recall double"
+    return local_frame(
+        spark, rows, "nprobe int, candidates long, hits long, recall double"
     ).orderBy("nprobe")
 
 
@@ -1897,7 +1901,7 @@ def sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "embedding",
             F.least(F.col("dmin"), sqdist_to(list(pick["embedding"]))).alias("dmin"),
         )
-    out = spark.createDataFrame(chosen, "step INT, vec_id BIGINT, sel_dist DOUBLE")
+    out = local_frame(spark, chosen, "step INT, vec_id BIGINT, sel_dist DOUBLE")
     return out.select(
         "step", "vec_id", (F.round("sel_dist", 6) + 0.0).alias("sel_dist")
     ).orderBy("step")

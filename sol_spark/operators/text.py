@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sol_spark.registry import register
-from sol_spark.tables import load_tables
+from sol_spark.tables import load_tables, local_frame
 
 _NORM = "trim(regexp_replace(lower(text), '\\\\s+', ' '))"
 _NORM_DUCK = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -2598,7 +2598,10 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax collected to the driver (the model sync, exactly k-means'
     centroid collect), and a window rebuild partitioned by word. The loop
     runs through iterate() with per-step checkpoints, so lineage stays
-    linear and superseded vocabs release their storage.
+    linear and superseded vocabs release their storage. The merge table
+    itself accumulates on the driver (one row per step) and enters the
+    result plan once, as an Arrow-built ``LocalRelation``
+    (:func:`sol_spark.tables.local_frame`) — no Python worker reads it.
 
     Oracle: the same {BPE_MERGES} steps unrolled as CTE chains (the
     sim_kmeans_train discipline), bit-identical pair choices and vocab
@@ -2610,7 +2613,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def bpe_result(vocab: DataFrame) -> DataFrame:
         return (
-            spark.createDataFrame(merges, "step INT, pa STRING, pb STRING, freq BIGINT")
+            local_frame(spark, merges, "step INT, pa STRING, pb STRING, freq BIGINT")
             .select("step", "pa", "pb", F.concat("pa", "pb").alias("merged"), "freq")
             .orderBy("step")
         )
@@ -4859,7 +4862,11 @@ def text_fasttext_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket map-side-combinable gradient agg; the model syncs to the
     driver as {FT_BUCKETS} rows per step (the sim_logreg_train /
     GradientDescent.runMiniBatchSGD structure, reference
-    mllib/optimization/GradientDescent.scala:162)."""
+    mllib/optimization/GradientDescent.scala:162). The updated weights go
+    back into the next step's join, and the final weights into the result,
+    as Arrow-built ``LocalRelation`` frames
+    (:func:`sol_spark.tables.local_frame`), so no step runs a Python
+    worker."""
     from sol_spark.operators.dedup import local_checkpoint, release_result
 
     t = load_tables(spark, sf_dir)
@@ -4884,7 +4891,7 @@ def text_fasttext_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = {r["bucket"]: 0 for r in df_counts.select("bucket").collect()}
     den = FT_LR_DIV * n_docs
     for _ in range(FT_ITERS):
-        wdf = spark.createDataFrame(sorted(w.items()), "bucket bigint, w bigint")
+        wdf = local_frame(spark, sorted(w.items()), "bucket bigint, w bigint")
         s = (
             toks.join(F.broadcast(wdf), "bucket")
             .groupBy("doc_id")
@@ -4906,7 +4913,7 @@ def text_fasttext_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b, g in grads.items():
             step = g // den if g >= 0 else -((-g) // den)
             w[b] = w[b] - step
-    wdf = spark.createDataFrame(sorted(w.items()), "bucket bigint, weight_micro bigint")
+    wdf = local_frame(spark, sorted(w.items()), "bucket bigint, weight_micro bigint")
     out = (
         wdf.join(df_counts, "bucket")
         .select("bucket", F.col("doc_freq").cast("long"), F.col("weight_micro").cast("long"))

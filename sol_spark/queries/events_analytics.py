@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sol_spark.registry import register
-from sol_spark.tables import load_tables
+from sol_spark.tables import load_tables, local_frame
 
 # ---------------------------------------------------------------------------
 # Funnel: view -> click (within 24h) -> purchase (within 24h of the click)
@@ -1596,7 +1596,7 @@ def events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = hourly.select(F.col("hour").alias("hour_a"), F.col("n").alias("na"))
     b = hourly.select(F.col("hour").alias("hour_b"), F.col("n").alias("nb"))
-    lags = spark.createDataFrame([(l,) for l in ACF_LAGS], "lag long")
+    lags = local_frame(spark, [(l,) for l in ACF_LAGS], "lag long")
     return (
         a.crossJoin(F.broadcast(lags))
         .withColumn("target", F.expr("timestampadd(HOUR, lag, hour_a)"))
@@ -4308,7 +4308,7 @@ def events_conformance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     t = load_tables(spark, sf_dir)
-    allowed = spark.createDataFrame(list(_CONFORM_EDGES), "f string, t string")
+    allowed = local_frame(spark, _CONFORM_EDGES, "f string, t string")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     seq = t["events"].select(
         "user_id", "ts", "event_id", "event_type",
@@ -5110,9 +5110,7 @@ def events_watermark_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("late")
         )
     )
-    delays = spark.createDataFrame(
-        [(int(d),) for d in WM_DELAY_GRID_S], "wm_delay_s long"
-    )
+    delays = local_frame(spark, [(int(d),) for d in WM_DELAY_GRID_S], "wm_delay_s long")
     return (
         lateness.crossJoin(F.broadcast(delays))
         .groupBy("wm_delay_s")

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sol_spark.registry import register
-from sol_spark.tables import load_tables
+from sol_spark.tables import load_tables, local_frame
 
 # ---------------------------------------------------------------------------
 # Window functions
@@ -3113,8 +3113,8 @@ def stats_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source")
         .agg(F.count(F.lit(1)).cast("long").alias("games"), F.sum("w").cast("long").alias("wins"))
     )
-    fitted = spark.createDataFrame(
-        [(k, round(s[k], 6) + 0.0) for k in sources], "source string, strength double"
+    fitted = local_frame(
+        spark, [(k, round(s[k], 6) + 0.0) for k in sources], "source string, strength double"
     )
     out = local_checkpoint(
         fitted.join(gm, "source", "left")
@@ -4815,7 +4815,7 @@ def sketch_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cum = counts.select("low", "width", F.sum("cnt").over(w_cum).alias("cume"))
     nn = c.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    qs = spark.createDataFrame([(50,), (90,), (99,)], "q_pct long")
+    qs = local_frame(spark, [(50,), (90,), (99,)], "q_pct long")
     ranks = qs.crossJoin(F.broadcast(nn)).select(
         "q_pct", "n", F.expr("(q_pct * n + 99) div 100").cast("long").alias("rnk")
     )

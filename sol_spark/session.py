@@ -17,8 +17,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Number of local cores used when SPARK_GRAFT_CPUS is unset.
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def default_cpus() -> int:
+    """Local cores: ``$SPARK_GRAFT_CPUS``, else the cores this process may
+    run on (its CPU affinity, which a container's cpuset narrows)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory() -> str:
+    """Driver heap: ``$SPARK_GRAFT_DRIVER_MEM``, else a quarter of
+    ``MemTotal`` (at least 1 GB). The rest is left to Python workers,
+    off-heap buffers and the page cache, which matters on a machine
+    without swap."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        mem_kb = int(next(line for line in f if line.startswith("MemTotal")).split()[1])
+    return f"{max(1024, mem_kb // 1024 // 4)}m"
 
 
 def session_builder(
@@ -41,7 +57,7 @@ def session_builder(
         real cluster set it ~2-3x total cores.
       * Arrow enabled for every pandas-UDF boundary (the LLM operators).
     """
-    cpus = int(_DEFAULT_CPUS)
+    cpus = default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
@@ -62,7 +78,7 @@ def session_builder(
         # read them as long and rebuild (see tables._read).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -73,12 +89,12 @@ def session_builder(
 def get_session(app_name: str = "solspark", master: str | None = None) -> SparkSession:
     """Get-or-create a session with the solspark profile.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster is
+    ``master`` defaults to ``local[default_cpus()]`` when no cluster is
     configured; on a real cluster, leave it unset and submit normally.
     """
     builder = session_builder(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
-        master = f"local[{_DEFAULT_CPUS}]"
+        master = f"local[{default_cpus()}]"
     if master:
         builder = builder.master(master)
     spark = builder.getOrCreate()

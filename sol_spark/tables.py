@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import weakref
+from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -103,3 +104,23 @@ def load_tables(
             df.createOrReplaceTempView(name)
         _VIEWS_FOR_SESSION[spark] = sf_abs
     return dict(tables)
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence[Any]], ddl: str) -> DataFrame:
+    """The one way rows held on the driver enter a plan (model syncs, merge
+    tables, small constant grids): ``rows`` are tuples in the column order of
+    ``ddl`` (``"a INT, b ARRAY<DOUBLE>"``).
+
+    The rows are built into a ``pyarrow.Table`` column by column and handed
+    to ``createDataFrame`` with the parsed schema, so the optimized plan's
+    leaf is a ``LocalRelation``: no pickled ``parallelize`` RDD, and no
+    Python-worker pass each time a job reads the frame. This holds with
+    ``spark.sql.execution.arrow.pyspark.enabled=false`` too."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(ddl)
+    schema = to_arrow_schema(struct)
+    columns = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=schema), struct)

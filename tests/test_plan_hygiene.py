@@ -110,10 +110,22 @@ def _specs():
     return [(n, s) for n, s in sorted(all_queries().items()) if n not in EAGER_BUILD]
 
 
+# name -> (formatted physical plan, output schema). Both gates below read
+# the same build: constructing ~500 plans is most of this module's time,
+# and building each twice doubled it.
+_BUILT: dict = {}
+
+
+def _built(spark, sf_dir, name):
+    if name not in _BUILT:
+        df = all_queries()[name].fn(spark, sf_dir)
+        _BUILT[name] = (_plan(df), df.schema)
+    return _BUILT[name]
+
+
 @pytest.mark.parametrize("name", [n for n, _ in _specs()])
 def test_no_cartesian_no_row_python(spark, sf_dir, name):
-    spec = all_queries()[name]
-    plan = _plan(spec.fn(spark, sf_dir))
+    plan, _ = _built(spark, sf_dir, name)
     if name not in CARTESIAN_OK:
         assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
     # Row-at-a-time Python. Arrow nodes contain 'ArrowEvalPython' /
@@ -138,8 +150,7 @@ def test_no_complex_types_in_output(spark, sf_dir, name):
     their oracle rows.)"""
     from pyspark.sql.types import ArrayType, DecimalType, MapType, StructType
 
-    spec = all_queries()[name]
-    schema = spec.fn(spark, sf_dir).schema
+    _, schema = _built(spark, sf_dir, name)
     for f in schema.fields:
         assert not isinstance(f.dataType, (ArrayType, MapType, StructType)), (
             f"{name}: complex-typed output column {f.name}: {f.dataType.simpleString()}"
