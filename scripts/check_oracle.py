@@ -1,7 +1,12 @@
 """Dev loop: run every registered query against the DuckDB oracle.
 
-Usage: python scripts/check_oracle.py [--strict] [--vanilla]
+Usage: python scripts/check_oracle.py [--vanilla]
            [--changed-since <rev>] [sf_dir] [name_filter...]
+
+Every query is compared strictly: a tolerance-free value hash (float repr
+equality), as the external correctness check computes it. Run the full
+corpus at sf0.01 AND sf0.1 at least once per round to flush round(float)
+last-digit ties before they ship.
 
 ``--changed-since <rev>`` restricts the sweep to queries whose DEFINING
 module (the file holding the registered fn) changed vs the given git rev —
@@ -11,11 +16,6 @@ bar; this flag is for iterating. Helper-module edits (oracle.py,
 session.py, tables.py, operators/* imported by query modules) fall back to
 the FULL sweep because the dependency graph isn't tracked — only a
 changed-file set that is entirely query-defining modules narrows the run.
-
-``--strict`` reproduces the driver's tolerance-free value hash (float repr
-equality instead of rel_tol=1e-6) — run the full corpus in strict mode at
-sf0.01 AND sf0.1 at least once per round to flush round(float) last-digit
-ties before the driver samples them.
 
 ``--vanilla`` runs under a PLAIN SparkSession (no solspark config profile,
 no Arrow toggle) — the driver-simulation mode that catches
@@ -76,9 +76,12 @@ def main() -> int:
         i = raw.index("--changed-since")
         changed_rev = raw[i + 1]
         raw = raw[:i] + raw[i + 2:]
-    argv = [a for a in raw if a not in ("--strict", "--vanilla")]
-    exact = "--strict" in raw
     vanilla = "--vanilla" in raw
+    argv = [a for a in raw if a != "--vanilla"]
+    unknown = [a for a in argv if a.startswith("--")]
+    if unknown:
+        print(f"unknown option(s): {' '.join(unknown)}\n{__doc__}", file=sys.stderr)
+        return 2
     sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
     name_filters = argv[1:]
     if vanilla:
@@ -122,12 +125,7 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            df = spec.fn(spark, sf_dir)
-            if spec.oracle is None:
-                n = df.count()
-                print(f"  {name:35s} rows-only: {n} rows [{time.time()-t0:.1f}s]")
-                continue
-            ok, msg = compare(df, spec.oracle, sf_dir, exact=exact)
+            ok, msg = compare(spec.fn(spark, sf_dir), spec.oracle, sf_dir)
         except Exception as e:  # noqa: BLE001
             ok, msg = False, f"EXC {type(e).__name__}: {str(e)[:300]}"
         status = "PASS" if ok else "FAIL"

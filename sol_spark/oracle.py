@@ -1,7 +1,7 @@
 """DuckDB oracle harness — mirrors the driver's correctness gate: run the
 Spark query and the oracle SQL on the same parquet tables, then compare
 row count, schema shape, and order-insensitive values (column-name sorted),
-with numeric tolerance.
+floats by repr.
 """
 
 from __future__ import annotations
@@ -116,13 +116,13 @@ def _values_close(a: Any, b: Any, rtol: float = 1e-6, exact: bool = False) -> bo
     return str(a) == str(b)
 
 
-def compare(spark_df, oracle_sql: str, sf_dir: str, exact: bool = False) -> tuple[bool, str]:
+def compare(spark_df, oracle_sql: str, sf_dir: str) -> tuple[bool, str]:
     """Returns (ok, message). Row-order and column-order insensitive.
 
-    ``exact=True`` reproduces the driver's tolerance-free value hash:
-    floats must agree to the last decimal digit (repr equality), not to
-    rel_tol=1e-6 — the mode that would have caught tpcds_q47/q57 locally
-    before round 6 shipped them red.
+    Tolerance-free, like the external correctness check's value hash:
+    floats must agree to the last decimal digit (repr equality) — the
+    comparison that would have caught tpcds_q47/q57 locally before round 6
+    shipped them red.
     """
     sp = spark_df.toPandas()
     con = duck_connection(sf_dir)
@@ -140,9 +140,9 @@ def compare(spark_df, oracle_sql: str, sf_dir: str, exact: bool = False) -> tupl
         ta, tb = _dtype_token(sp[c]), _dtype_token(du[c])
         if ta != tb and "empty" not in (ta, tb):
             return False, f"dtype drift in col {c}: spark={ta} oracle={tb}"
-    a_rows, b_rows = _normalize(sp, exact=exact), _normalize(du, exact=exact)
+    a_rows, b_rows = _normalize(sp, exact=True), _normalize(du, exact=True)
     for i, (ra, rb) in enumerate(zip(a_rows, b_rows)):
         for j, (va, vb) in enumerate(zip(ra, rb)):
-            if not _values_close(va, vb, exact=exact):
+            if not _values_close(va, vb, exact=True):
                 return False, f"value mismatch at sorted-row {i}, col {sorted(sp.columns)[j]}: spark={va!r} oracle={vb!r}"
     return True, f"ok ({len(sp)} rows)"

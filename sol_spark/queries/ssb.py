@@ -33,21 +33,11 @@ rounded at 4).
 
 from __future__ import annotations
 
-import os
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sol_spark.registry import register
-from sol_spark.tables import load_tables
-
-# Per-(session, sf_dir) derived-star cache — the load_tables/_ds catalog
-# discipline (see tpcds._ds): the star is five immutable LAZY plans whose
-# re-derivation is pure py4j/analysis overhead per registered-query build.
-_STAR_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, dict[str, DataFrame]]]" = (
-    weakref.WeakKeyDictionary()
-)
+from sol_spark.tables import load_tables, per_session_plan
 
 # ---------------------------------------------------------------------------
 # Shared star-schema derivation
@@ -86,21 +76,11 @@ lineorder AS (
 """
 
 
+@per_session_plan
 def _star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Build the derived star schema as DataFrames (broadcastable dims).
-
-    Cached per (session, sf_dir); shallow-copied on return so callers may
-    rebind dict entries without touching the shared catalog."""
-    sf_abs = os.path.abspath(sf_dir)
-    per_session = _STAR_CACHE.setdefault(spark, {})
-    cached = per_session.get(sf_abs)
-    if cached is None:
-        cached = _build_star(spark, sf_dir)
-        per_session[sf_abs] = cached
-    return dict(cached)
-
-
-def _build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Build the derived star schema as DataFrames (broadcastable dims):
+    five immutable LAZY plans whose re-derivation is pure py4j/analysis
+    overhead per registered-query build, hence memoized per session."""
     t = load_tables(spark, sf_dir)
     dates = (
         t["orders"]

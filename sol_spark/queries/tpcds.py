@@ -52,23 +52,12 @@ plans them. Every query is one pass over the derived fact.
 
 from __future__ import annotations
 
-import os
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from sol_spark.registry import register
-from sol_spark.tables import load_tables
-
-# Per-(session, sf_dir) derived-star cache; see _ds's docstring. Weakly
-# keyed on the session object so entries die with their session (the
-# load_tables discipline — id() reuse after GC could hand a new session
-# plans bound to a dead JVM).
-_DS_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, dict[str, DataFrame]]]" = (
-    weakref.WeakKeyDictionary()
-)
+from sol_spark.tables import load_tables, per_session_plan
 
 # ---------------------------------------------------------------------------
 # Shared derived-star CTEs (DuckDB dialect; `//` = integer division)
@@ -275,6 +264,7 @@ catalog_returns AS (
 """
 
 
+@per_session_plan
 def _ds(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Build the derived TPC-DS star as DataFrames.
 
@@ -282,27 +272,14 @@ def _ds(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     returned plain but hint-broadcast at the join sites; item/customer dims
     are SF-proportional and left to AQE.
 
-    Cached per (session, sf_dir) exactly like :func:`load_tables`'s catalog
-    cache (r12 optimization round, guide §1.2/§5 — the driver should do
-    almost no data work): the star is 21 LAZY DataFrames derived through
-    several hundred analyzed transformations, which cost ~1.2-1.5 s of pure
-    py4j + per-call analysis on EVERY registered-query build — re-derived
-    106 times across the TPC-DS corpus with byte-identical plans. Sharing
-    immutable lazy plans is a catalog, not result caching: nothing is
-    materialized, and every action still scans the parquet fixtures.
+    Memoized per (session, sf_dir) by :func:`per_session_plan`: the star is
+    21 LAZY DataFrames derived through several hundred analyzed
+    transformations, which cost ~1.2-1.5 s of pure py4j + per-call analysis
+    on EVERY registered-query build — re-derived 106 times across the
+    TPC-DS corpus with byte-identical plans. Sharing immutable lazy plans is
+    a catalog, not result caching: nothing is materialized, and every action
+    still scans the parquet fixtures.
     """
-    sf_abs = os.path.abspath(sf_dir)
-    per_session = _DS_CACHE.setdefault(spark, {})
-    cached = per_session.get(sf_abs)
-    if cached is None:
-        cached = _build_ds(spark, sf_dir)
-        per_session[sf_abs] = cached
-    # Shallow copy: callers may pop/overwrite dict entries, never mutate the
-    # (immutable) DataFrames themselves.
-    return dict(cached)
-
-
-def _build_ds(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     t = load_tables(spark, sf_dir)
     brandnum = F.expr("CAST(substr(p_brand, 7) AS INT)")
     category_id = F.expr("(CAST(substr(p_brand, 7) AS INT) - 1) DIV 5 + 1")

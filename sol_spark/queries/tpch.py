@@ -563,7 +563,7 @@ ORDER BY cntrycode
 
 
 def _make_shared(name: str, sql: str, tags: tuple[str, ...]):
-    @register(name, sql, tags=tags, doc=f"Shared ANSI SQL (identical text runs on Spark and DuckDB):\n{sql}")
+    @register(name, sql, tags=tags)
     def _q(spark: SparkSession, sf_dir: str, _sql: str = sql) -> DataFrame:
         load_tables(spark, sf_dir)
         return spark.sql(_sql)

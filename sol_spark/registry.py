@@ -18,9 +18,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None  # DuckDB SQL; None => driver does rows-only check
+    oracle: str  # DuckDB SQL
     tags: tuple[str, ...] = field(default_factory=tuple)
-    doc: str = ""
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -28,288 +27,21 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 def register(
     name: str,
-    oracle: str | None,
+    oracle: str,
     tags: tuple[str, ...] = (),
-    doc: str = "",
 ) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, tags=tags, doc=doc or (fn.__doc__ or ""))
+        _REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, tags=tags)
         return fn
 
     return deco
 
 
-# Names already green in a driver CORRECTNESS_r{1..3,5}.json window (cumulative
-# union, intersected with the live registry; no r4 artifact was ever
-# delivered). The driver verifies the FIRST ~50 registered names each round,
-# so `all_queries` orders never-verified names first.
-_DRIVER_VERIFIED: frozenset[str] = frozenset({
-    "agg_modern", "approx_count_distinct_bounds", "asof_join_last_click",
-    "cross_join_dims", "dedup_clusters", "dedup_containment",
-    "dedup_embedding_cosine", "dedup_exact", "dedup_keep_list",
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_pagerank",
-    "dedup_semdedup", "dedup_simhash", "dedup_simhash_clusters",
-    "emb_cluster_profile", "emb_quantize_int8", "events_anomaly_mad",
-    "events_funnel", "events_markov_transitions", "events_resample_ffill",
-    "events_resample_interp", "events_retention", "fn_array", "fn_array_ops",
-    "fn_bitwise", "fn_conditional", "fn_datetime", "fn_datetime_arith",
-    "fn_higher_order", "fn_json_hash", "fn_json_struct", "fn_map", "fn_math",
-    "fn_null_safe_join", "fn_regexp", "fn_scalar_extra", "fn_string",
-    "fn_string_misc", "fn_try_arith", "fn_url", "fn_xpath",
-    "gen_explode_wordcount", "gen_inline", "gen_posexplode_tokens",
-    "gen_stack_unpivot", "gen_unpivot_api", "graph_triangles", "gs_cube",
-    "gs_grouping_sets", "gs_rollup", "join_shuffle_hash",
-    "lateral_topk_orders", "layout_zorder", "mm_chunk_bytes",
-    "mm_decode_features", "mm_frame_sample", "mm_resize_stub",
-    "pd_cogroup_user_funnel", "pd_grouped_wavg", "pd_grouped_zscore",
-    "pd_map_in_arrow", "percentile_exact", "pipeline_pretrain_corpus",
-    "pivot_linestatus", "profile_columns", "range_join_within_1min",
-    "recursive_month_spine", "sample_hash_mod", "sample_stratified",
-    "set_distinct", "set_except", "set_except_all", "set_intersect",
-    "set_intersect_all", "set_union_all", "set_union_by_name",
-    "sim_kmeans_train", "sim_knn_label", "sim_label_cohesion",
-    "sim_logreg_train", "sim_random_projection", "sim_topk_exact",
-    "sim_topk_ivf", "sim_topk_lsh", "sketch_bitmap_distinct",
-    "sketch_hll_rollup", "skew_salted_agg", "skew_salted_join",
-    "stats_aggregates", "stats_regression", "stream_dedup_first",
-    "stream_session_window", "stream_sliding_agg", "stream_stream_join",
-    "stream_stream_join_full", "stream_stream_join_outer",
-    "stream_tumbling_agg", "stream_window_unique_users",
-    "text_bpe_pair_counts", "text_chunk_overlap", "text_contamination",
-    "text_dsir_weights", "text_fingerprint", "text_lang_id", "text_line_dedup",
-    "text_lm_score", "text_pack_sequences", "text_pii_scrub",
-    "text_quality_filter", "text_repetition", "text_split_doc_pairs",
-    "text_stats", "text_tfidf_topterms", "text_token_count",
-    "text_train_val_split", "text_winnowing", "time_rollup_hierarchy",
-    "tpcds_q12", "tpcds_q2", "tpcds_q20", "tpcds_q33", "tpcds_q77", "tpch_q1",
-    "tpch_q10", "tpch_q11", "tpch_q12", "tpch_q13", "tpch_q14", "tpch_q15",
-    "tpch_q16", "tpch_q17", "tpch_q18", "tpch_q19", "tpch_q2", "tpch_q20",
-    "tpch_q21", "tpch_q22", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6",
-    "tpch_q7", "tpch_q8", "tpch_q9", "udtf_chunk", "win_first_last_nth",
-    "win_lag_lead", "win_ntile_pctrank", "win_ntile_pctrank_partitioned",
-    "win_range_frame", "win_range_frame_partitioned",
-    "win_rank_topk_per_group", "win_running_total", "win_time_range_frame",
-})
-
-# Round-8 tier 0: tpcds_q81/q84 were pinned at the tail of _R7_WINDOW but
-# the driver's 50-slot budget (2 tier-0 reds + 48 window names) cut them —
-# CORRECTNESS_r07.json verified exactly the first 48 window names. They are
-# re-pinned FIRST here so they cannot orphan a second time (round-7 verdict
-# ask #1). q47/q57 came back exact-hash green in CORRECTNESS_r07.json and
-# are folded into _DRIVER_VERIFIED below with the other 48 r7 greens.
-_R8_T0: tuple[str, ...] = (
-    "tpcds_q81", "tpcds_q84",
-)
-
-# The 48 green rows of CORRECTNESS_r06.json (driver round 6).
-_DRIVER_VERIFIED = _DRIVER_VERIFIED | frozenset({
-    "dedup_incremental", "graph_label_propagation", "dedup_method_overlap",
-    "dedup_threshold_sweep", "dedup_band_sweep", "graph_degree_stats",
-    "mm_integrity_audit", "sim_topk_pq", "emb_matryoshka_eval",
-    "sim_recall_eval", "emb_centroid_drift", "emb_outlier_detection",
-    "sim_nprobe_sweep", "skew_diagnose", "text_domain_mix",
-    "pipeline_rag_corpus", "text_lm_bigram_score", "text_quality_flags",
-    "sample_importance", "text_lang_id_eval", "text_pmi_cooccurrence",
-    "sample_reservoir", "profile_histogram",
-    "tpcds_q21", "tpcds_q22", "tpcds_q37", "tpcds_q82", "tpcds_q39",
-    "tpcds_q40", "tpcds_q72", "tpcds_q99", "tpcds_q16", "tpcds_q38",
-    "tpcds_q87", "tpcds_q97", "tpcds_q74", "tpcds_q17", "tpcds_q31",
-    "tpcds_q30", "tpcds_q85", "tpcds_q91",
-    "tpcds_q8", "tpcds_q23", "tpcds_q49", "tpcds_q4", "tpcds_q26",
-    "tpcds_q58", "tpcds_q62",
-})
-
-# The 50 green rows of CORRECTNESS_r07.json (driver round 7): the two r6
-# reds (q47/q57, re-verified after the integer-cent rewrite) plus the first
-# 48 names of the r7 window. q81/q84 — the window's tail — were cut by the
-# driver's 50-slot budget and are re-pinned at tier 0 (_R8_T0) above.
-_DRIVER_VERIFIED = _DRIVER_VERIFIED | frozenset({
-    "tpcds_q47", "tpcds_q57",
-    "graph_kcore", "graph_modularity", "graph_adamic_adar",
-    "graph_clustering_coef", "geo_nearest_supplier", "geo_radius_join",
-    "dq_expectations", "privacy_k_anonymity", "er_blocking",
-    "scd2_order_priority", "cdc_apply_changelog", "privacy_l_diversity",
-    "snapshot_diff", "er_clusters", "privacy_generalize",
-    "privacy_t_closeness", "mm_phash_dedup", "emb_pca_cov", "emb_silhouette",
-    "emb_dim_stats", "text_dup_spans", "text_readability",
-    "text_source_profile", "text_zipf_fit", "text_burstiness",
-    "basket_affinity", "cohort_revenue", "asof_join_nearest",
-    "orders_interarrival", "supplier_hhi", "basket_rules",
-    "tpcds_q69", "tpcds_q75", "tpcds_q86", "tpcds_q92", "tpcds_q94",
-    "tpcds_q14", "tpcds_q32", "tpcds_q35", "tpcds_q54", "tpcds_q66",
-    "tpcds_q71", "tpcds_q83", "tpcds_q95", "tpcds_q5", "tpcds_q18",
-    "tpcds_q25", "tpcds_q78",
-})
-
-
-# Round-8 driver window (tier 1), pinned at round-6 time, TRIMMED to 48 at
-# round-8 time so tier 0 (2) + tier 1 (48) exactly fill the driver's
-# 50-slot budget — the r7 lesson: a 50-name window behind a 2-name tier 0
-# orphans its tail. The two trimmed names (dq_freshness,
-# dq_duplicate_payments) lead _R9_WINDOW below.
-_R8_WINDOW: tuple[str, ...] = (
-    "dedup_minhash_calibration", "sim_mips", "sample_kcenter",
-    "sim_knn_graph", "sim_topk_ivfpq", "sim_rrf_hybrid",
-    "sim_mmr_rerank", "sim_topk_hamming", "sim_hamming_recall",
-    "sim_hard_negatives", "sim_topk_int8", "sim_rank_metrics",
-    "sim_centroid_purity", "sim_two_stage_retrieval", "dedup_semdedup_kmeans",
-    "graph_bfs_distances", "dedup_prefix_filter_join", "dedup_representatives",
-    "dedup_sketch_pr", "graph_harmonic_centrality", "graph_mst",
-    "graph_mst_cut_profile", "dedup_ensemble_clusters", "graph_jaccard_links",
-    "graph_ppr", "graph_assortativity", "dedup_keep_best_quality",
-    "dedup_cc_incremental", "dedup_rand_index", "dedup_edit_distance",
-    "graph_local_bridges", "dedup_soft_weights", "dedup_mis_keepset",
-    "dedup_cross_source_matrix", "dedup_hash_collision_audit", "dedup_cluster_size_hist",
-    "graph_conductance", "geo_hotspots", "privacy_dp_counts",
-    "er_fellegi_sunter", "privacy_dp_user_contribution", "dq_key_discovery",
-    "er_survivorship", "dq_reconciliation", "privacy_dp_sum",
-    "warehouse_partition_stats", "warehouse_pit_join", "privacy_randomized_response",
-)
-
-
-# Round-9 driver window (tier 2), pinned now (round-7 verdict ask #7) so
-# session turnover can't scramble the order: the two names trimmed off
-# _R8_WINDOW, then the head of the r4 backlog — the 50 names the r4 driver
-# window checked but whose CORRECTNESS_r04.json artifact was never
-# delivered (full early-wave TPC-DS + SSB). All pass the identical oracle
-# contract locally at three SFs (scripts/check_oracle.py --strict).
-_R9_WINDOW: tuple[str, ...] = (
-    "dq_freshness", "dq_duplicate_payments",
-    "tpcds_q3", "tpcds_q7", "tpcds_q19", "tpcds_q42", "tpcds_q52",
-    "tpcds_q55", "tpcds_q68", "tpcds_q98", "tpcds_q27", "tpcds_q36",
-    "tpcds_q53", "tpcds_q89", "tpcds_q13", "tpcds_q6", "tpcds_q73",
-    "tpcds_q65", "tpcds_q34", "tpcds_q43", "tpcds_q88", "tpcds_q90",
-    "tpcds_q96", "tpcds_q51", "tpcds_q59", "tpcds_q50", "tpcds_q93",
-    "tpcds_q61", "tpcds_q15", "tpcds_q45", "tpcds_q79", "tpcds_q1",
-    "tpcds_q24", "tpcds_q44", "tpcds_q9", "tpcds_q41", "tpcds_q28",
-    "tpcds_q70", "tpcds_q67",
-    "ssb_q1_1", "ssb_q1_2", "ssb_q1_3", "ssb_q2_1", "ssb_q2_2", "ssb_q2_3",
-    "ssb_q3_1", "ssb_q3_2", "ssb_q3_3", "ssb_q3_4", "ssb_q4_1",
-)
-
-# Tier-0 head (round 10): the r4-backlog tail that _R9_WINDOW's 50-name
-# budget could not hold — pinned so the r7 tail-orphan failure mode can't
-# recur. _R9_WINDOW held 50 names and CORRECTNESS_r09.json sampled exactly
-# those 50, so these two roll to the front of round 10.
-_R10_HEAD: tuple[str, ...] = (
-    "ssb_q4_2", "ssb_q4_3",
-)
-
-# CORRECTNESS_r08.json: all 50 rows (tier 0 q81/q84 + the 48-name
-# _R8_WINDOW) came back exact-hash green, so both pins fold into the
-# driver-verified set and _R9_WINDOW rotates to the front for round 9.
-_DRIVER_VERIFIED = _DRIVER_VERIFIED | frozenset(_R8_T0) | frozenset(_R8_WINDOW)
-
-# CORRECTNESS_r09.json: all 50 rows (the full 50-name _R9_WINDOW — the r4
-# backlog: early-wave TPC-DS + SSB q1–q4_1 + the two dq_* names trimmed
-# from _R8_WINDOW) came back exact-hash green, so the window folds into the
-# driver-verified set and _R10_HEAD + _R10_WINDOW rotate to the front.
-_DRIVER_VERIFIED = _DRIVER_VERIFIED | frozenset(_R9_WINDOW)
-
-# Round-10 driver window (tier 2), pinned at round-9 time (round-8 verdict
-# ask #5) so session turnover can't scramble registration order: the first
-# 48 never-driver-sampled names in registration order once _R9_WINDOW +
-# _R10_HEAD clear — the r8 session-A/B additions (sim graph/range search,
-# rouge2/shared-spans/capped-pairs dedup, the graph-algorithm wave 2,
-# warehouse/privacy/dq wave 2, the layout family) plus the head of the
-# text tier-4 pool. All strict-green locally at three SFs.
-_R10_WINDOW: tuple[str, ...] = (
-    "sim_prefilter_vs_postfilter", "sim_topk_filtered", "sim_graph_search",
-    "sim_graph_recall", "sim_range_search", "dedup_rate_by_source",
-    "dedup_rouge2_pairs", "dedup_cluster_cohesion",
-    "dedup_cross_split_decontam", "dedup_pairs_capped", "graph_ktruss",
-    "dedup_shared_spans", "graph_diameter_estimate",
-    "graph_maximal_matching", "graph_densest_subgraph",
-    "er_blocking_quality", "warehouse_agg_state_merge", "privacy_dp_topk",
-    "warehouse_fd_discovery", "dq_fk_orphans", "privacy_dp_quantile",
-    "privacy_tokenize_consistency", "warehouse_inferred_members",
-    "warehouse_junk_dimension", "warehouse_bridge_allocation",
-    "dq_id_gap_audit", "dq_fk_fanout_profile", "warehouse_delete_vectors",
-    "dq_hash_uniformity", "warehouse_retention_policy",
-    "warehouse_audit_chain", "privacy_synthetic_allocation",
-    "dq_schema_drift", "warehouse_wap_gate", "layout_skipping_audit",
-    "layout_shard_balance", "layout_shard_manifest",
-    "layout_compaction_plan", "layout_hilbert", "layout_curve_ab",
-    "pipeline_multimodal_corpus", "sample_temperature", "text_cdc_chunks",
-    "text_ngram_novelty", "text_bpe_train", "text_bpe_apply",
-    "text_span_removal", "text_ccnet_buckets",
-)
-
-# Tier-2 head (round 11): the _R10_WINDOW tail the 50-slot budget cannot
-# hold — same orphan insurance as _R10_HEAD was for round 10.
-_R11_HEAD: tuple[str, ...] = (
-    "text_tokenizer_fertility", "text_bm25_topk",
-)
-
-# Round-11 driver window (tier 3), pinned at round-10 time (round-9 verdict
-# ask #6) so session turnover can't scramble registration order: the next
-# 48 never-driver-sampled names in registration order once _R10_HEAD +
-# _R10_WINDOW clear. All strict-green locally at three SFs.
-_R11_WINDOW: tuple[str, ...] = (
-    "dedup_bloom_incremental", "warehouse_ivm_agg", "dq_benford_audit",
-    "text_keyphrase_rake", "text_feature_hashing", "text_lm_trigram_backoff",
-    "text_doremi_mix", "sample_curriculum", "text_split_leakage",
-    "text_oov_rate", "text_boilerplate_lines", "text_code_switching",
-    "text_heaps_law", "text_length_gate_adaptive", "pipeline_token_budget",
-    "stats_cohens_kappa", "stats_mcnemar", "text_gibberish_score",
-    "text_license_flags", "text_group_split", "text_fasttext_quality",
-    "text_split_vocab_drift", "text_packing_ab", "stats_bootstrap_ci",
-    "warehouse_rf_refresh", "warehouse_incremental_agg",
-    "warehouse_gdpr_erasure", "orders_abc_classification",
-    "sketch_quantile_hist", "sample_balanced_classes",
-    "orders_fulfillment_lag", "stats_anova_oneway", "sample_neyman",
-    "sketch_kmv_intersection", "sketch_bloom_prefilter",
-    "orders_backlog_snapshot", "aqp_groupby_ci", "stats_bradley_terry",
-    "stats_cramers_v", "profile_ndv_estimate", "stats_auc_mannwhitney",
-    "stats_join_size_estimate", "stats_calibration_brier",
-    "stats_spearman_corr", "sketch_kmv_union_diff", "stats_wilson_ci",
-    "stats_woe_iv", "stats_permutation_test",
-)
-
-# Round-12 driver window (tier 4-pinned), fixed at round-11 time (r10
-# verdict ask #4): the next 48 never-driver-sampled names in registration
-# order once _R11_HEAD + _R11_WINDOW clear — the r9/r10 stats/sketch/aqp
-# tails, the full sqltests battery family (r10 + the r11 subquery/coercion
-# additions), the r11 dedup_minhash_incremental, and the head of the
-# never-sampled TPC-DS remainder, topped to 50 names (the full driver
-# budget — tier 5's registration-order tail never decides a rotation).
-# 108 names remain after this window (~2 more rounds at 50/round).
-_R12_WINDOW: tuple[str, ...] = (
-    "dedup_minhash_incremental", "orders_revenue_bridge", "stats_quantile_ci",
-    "sketch_hll_ie_audit", "aqp_error_vs_fraction", "range_join_banded",
-    "orders_abc_xyz", "rel_sql_sugar", "orders_chain_ladder",
-    "sketch_hdr_quantiles", "sample_neyman_allocation",
-    "sqltests_null_handling", "sqltests_group_analytics",
-    "sqltests_cross_join", "sqltests_limit", "sqltests_division_coercion",
-    "sqltests_nulls_ordering", "sqltests_not_in_null", "sqltests_group_by",
-    "sqltests_set_ops", "sqltests_join_edges", "sqltests_window",
-    "sqltests_operators", "sqltests_pivot", "sqltests_ordinals",
-    "sqltests_inline_tvf", "sqltests_coercion", "sqltests_exists",
-    "sqltests_simple_in", "sqltests_predicates_datetime", "sqltests_struct",
-    "sqltests_array", "sqltests_scalar_subq_predicate",
-    "sqltests_scalar_subq_select", "sqltests_in_joins",
-    "sqltests_in_group_having", "sqltests_in_orderby_limit",
-    "sqltests_in_setops", "sqltests_in_cte_multicol",
-    "sqltests_pushdown_misc", "sqltests_coercion_widen", "tpcds_q10",
-    "tpcds_q11", "tpcds_q29", "tpcds_q46", "tpcds_q48", "tpcds_q56",
-    "tpcds_q60", "sqltests_compat_functions", "tpcds_q63",
-)
-
-
 def all_queries() -> dict[str, QuerySpec]:
-    """Import every query-defining module, then return the registry.
-
-    Ordering note: the driver's correctness harness verifies queries in
-    dict order under a fixed ~50-query budget, so the returned dict is
-    explicitly tiered: (0) the pinned r10 head (2 names — the SSB tail the
-    r9 budget cut); (1) the pinned round-10 window (48 names, so tiers 0+1
-    exactly fill the budget); (2) the pinned r11 head; (3) the pinned
-    round-11 window; (4) every other name not in ``_DRIVER_VERIFIED`` in
-    registration order (new queries land here automatically), queued for
-    round 12+; (5) the driver-green remainder.
-    """
+    """Import every query-defining module, then return the registry in
+    registration order."""
     # Imports are deferred so `import sol_spark` stays cheap.
     from sol_spark.operators import dedup, geo, governance, layout, multimodal, similarity, skew, text  # noqa: F401
     from sol_spark.queries import tpch  # noqa: F401
@@ -322,28 +54,4 @@ def all_queries() -> dict[str, QuerySpec]:
         pandas_ops,
     )
 
-    r10h_rank = {name: i for i, name in enumerate(_R10_HEAD)}
-    r10_rank = {name: i for i, name in enumerate(_R10_WINDOW)}
-    r11h_rank = {name: i for i, name in enumerate(_R11_HEAD)}
-    r11_rank = {name: i for i, name in enumerate(_R11_WINDOW)}
-    r12_rank = {name: i for i, name in enumerate(_R12_WINDOW)}
-
-    def tier(name: str) -> tuple[int, int]:
-        if name in r10h_rank:
-            return (0, r10h_rank[name])
-        if name in r10_rank:
-            return (1, r10_rank[name])
-        if name in r11h_rank:
-            return (2, r11h_rank[name])
-        if name in r11_rank:
-            return (3, r11_rank[name])
-        if name in r12_rank:
-            return (4, r12_rank[name])
-        if name not in _DRIVER_VERIFIED:
-            return (5, 0)
-        return (6, 0)
-
-    names = list(_REGISTRY)
-    # Stable sort: tier-1/2 members keep registration order among themselves.
-    names.sort(key=lambda n: tier(n))
-    return {n: _REGISTRY[n] for n in names}
+    return dict(_REGISTRY)

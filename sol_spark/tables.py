@@ -9,9 +9,10 @@ directory tree; partition pruning happens in Catalyst.
 
 from __future__ import annotations
 
+import functools
 import os
 import weakref
-from typing import Any, Sequence
+from typing import Any, Callable, Sequence, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,6 +33,8 @@ TABLE_NAMES = (
 BROADCAST_DIMS = ("region", "nation", "supplier", "part", "customer")
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+T = TypeVar("T")
 
 
 def _read(spark: SparkSession, path: str) -> DataFrame:
@@ -62,19 +65,53 @@ def _read(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-# Per-(session, sf_dir) catalog cache: every registered query calls
-# load_tables, and re-building 10 DataFrames + temp views per query is pure
-# py4j overhead (~0.3s/query measured at sf0.1). DataFrames are immutable
-# lazy plans, so sharing them across queries is safe. Temp views are
-# session-global, so track which sf_dir's views a session currently holds
-# and re-register when it switches (SQL-text queries resolve via views).
-# WeakKeyDictionary keyed on the session OBJECT, not id(): id() values are
-# reused after GC, which could hand a new session DataFrames bound to a dead
-# JVM (r1 ADVICE). Entries die with their session.
-_CATALOG_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, dict[str, DataFrame]]]" = (
+_PLANS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[Callable, str], Any]]" = (
     weakref.WeakKeyDictionary()
 )
+# Temp views are session-global: track which sf_dir's views a session holds
+# and re-register when it switches (SQL-text queries resolve via views).
 _VIEWS_FOR_SESSION: "weakref.WeakKeyDictionary[SparkSession, str]" = weakref.WeakKeyDictionary()
+
+
+def per_session_plan(fn: Callable[[SparkSession, str], T]) -> Callable[[SparkSession, str], T]:
+    """Memoize a PURE-LAZY plan function ``fn(spark, sf_dir)`` per session
+    and ``(fn, abspath(sf_dir))``: the fixture catalog, the derived TPC-DS/SSB
+    stars and the shared dedup feeder pairs are re-derived by every query
+    that reads them, and that construction is pure py4j/analysis latency
+    (q67's build: 1.21 s -> 0.25 s).
+
+    ONLY for functions with NO action, checkpoint or collect inside (the
+    catalog's parquet footer reads are the one exception: they read
+    metadata, not rows). The cached value is an immutable lazy plan, or a
+    dict of them that callers must not mutate, so every action still
+    recomputes from the parquet inputs: nothing is materialized and no
+    result is stored. A function that checkpoints must never be wrapped,
+    since memoizing materialized state would be cross-run result caching
+    AND a released-storage bug. ``tests/test_per_session_plan.py`` runs
+    every use and fails on any job it starts.
+
+    Weakly keyed on the session OBJECT, not id(): id() values are reused
+    after GC, which could hand a new session plans bound to a dead JVM.
+    Entries die with their session."""
+
+    @functools.wraps(fn)
+    def wrapped(spark: SparkSession, sf_dir: str) -> T:
+        per_session = _PLANS.setdefault(spark, {})
+        key = (fn, os.path.abspath(sf_dir))
+        if key not in per_session:
+            per_session[key] = fn(spark, sf_dir)
+        return per_session[key]
+
+    return wrapped
+
+
+@per_session_plan
+def _catalog(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    return {
+        name: _read(spark, path)
+        for name in TABLE_NAMES
+        if os.path.exists(path := os.path.join(sf_dir, f"{name}.parquet"))
+    }
 
 
 def load_tables(
@@ -83,27 +120,16 @@ def load_tables(
     register_views: bool = True,
 ) -> dict[str, DataFrame]:
     """Load every fixture table from ``sf_dir`` and (optionally) register
-    each as a temp view so both the DataFrame and SQL surfaces see them."""
+    each as a temp view so both the DataFrame and SQL surfaces see them.
+    The returned dict is shared by every caller in the session: read it,
+    never rebind its entries."""
+    tables = _catalog(spark, sf_dir)
     sf_abs = os.path.abspath(sf_dir)
-    per_session = _CATALOG_CACHE.setdefault(spark, {})
-    cached = per_session.get(sf_abs)
-    if cached is not None and not register_views:
-        return dict(cached)
-    if cached is not None and _VIEWS_FOR_SESSION.get(spark) == sf_abs:
-        return dict(cached)
-    tables: dict[str, DataFrame] = cached or {}
-    if not tables:
-        for name in TABLE_NAMES:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            if not os.path.exists(path):
-                continue
-            tables[name] = _read(spark, path)
-        per_session[sf_abs] = dict(tables)
-    if register_views:
+    if register_views and _VIEWS_FOR_SESSION.get(spark) != sf_abs:
         for name, df in tables.items():
             df.createOrReplaceTempView(name)
         _VIEWS_FOR_SESSION[spark] = sf_abs
-    return dict(tables)
+    return tables
 
 
 def local_frame(spark: SparkSession, rows: Sequence[Sequence[Any]], ddl: str) -> DataFrame:

@@ -1,28 +1,17 @@
-"""The correctness gate, mirrored locally: every registered query either
-hash-matches its DuckDB oracle or (rows-only queries) runs and returns a
-stable schema. Mirrors the reference's golden-file strategy
+"""The correctness gate, mirrored locally: every registered query
+hash-matches its DuckDB oracle under the strict (tolerance-free) compare.
+Mirrors the reference's golden-file strategy
 (/root/reference/sql/core/src/test/scala/org/apache/spark/sql/SQLQueryTestSuite.scala)
-with DuckDB as the golden-result generator.
+with DuckDB as the golden-result generator. The query is built once by the
+``built_query`` fixture (conftest.py), which the plan gates share.
 """
 
 from __future__ import annotations
 
-import pytest
-
 from sol_spark.oracle import compare
 from sol_spark.registry import all_queries
 
-SPECS = all_queries()
 
-
-@pytest.mark.parametrize("name", sorted(SPECS))
-def test_query_matches_oracle(name: str, spark, sf_dir: str) -> None:
-    spec = SPECS[name]
-    df = spec.fn(spark, sf_dir)
-    if spec.oracle is None:
-        # Rows-only contract: runs, has a schema, row count is sane.
-        assert df.columns
-        assert df.count() >= 0
-        return
-    ok, msg = compare(df, spec.oracle, sf_dir)
-    assert ok, f"{name}: {msg}"
+def test_query_matches_oracle(built_query, sf_dir: str) -> None:
+    ok, msg = compare(built_query.df, all_queries()[built_query.name].oracle, sf_dir)
+    assert ok, f"{built_query.name}: {msg}"
